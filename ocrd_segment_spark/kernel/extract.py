@@ -82,25 +82,48 @@ MEDIA_RTYPE = {
 }
 
 
-def _classify(node: Node) -> str:
+# self-or-ancestor tags _classify looks for, one bit each; the
+# boilerplate tags in their precedence order
+_BOILERPLATE = ("nav", "header", "footer", "aside")
+_CHAIN_BITS = {t: 1 << k for k, t in enumerate(_BOILERPLATE + ("figure", "table"))}
+_FIGURE, _TABLE = _CHAIN_BITS["figure"], _CHAIN_BITS["table"]
+
+
+def _chain_bits(node: Node, memo: dict) -> int:
+    """OR of ``_CHAIN_BITS`` over ``node`` and its ancestors below the
+    document root. ``memo`` maps each node already seen to its bits, so
+    a page's regions together walk each ancestor once."""
+    path = []
+    n: Node | None = node
+    bits = 0
+    while n is not None and n.tag != "#document":
+        if n in memo:
+            bits = memo[n]
+            break
+        path.append(n)
+        n = n.parent
+    for n in reversed(path):
+        bits |= _CHAIN_BITS.get(n.tag, 0)
+        memo[n] = bits
+    return bits
+
+
+def _classify(node: Node, memo: dict) -> str:
     """Frozen rtype rule — analog of the region-type vocabulary
     (reference project.py:50-65 for the 15 types; extract_pages.py:39-98
-    for the subtype colordict). Boilerplate ancestors dominate."""
-    chain = []
-    n: Node | None = node
-    while n is not None and n.tag != "#document":
-        chain.append(n.tag)
-        n = n.parent
-    for boiler in ("nav", "header", "footer", "aside"):
-        if boiler in chain:
+    for the subtype colordict). Boilerplate ancestors dominate. ``memo``
+    is shared by all regions of a page (see ``_chain_bits``)."""
+    chain = _chain_bits(node, memo)
+    for boiler in _BOILERPLATE:
+        if chain & _CHAIN_BITS[boiler]:
             return boiler
-    if node.tag == "figcaption" or "figure" in chain:
+    if node.tag == "figcaption" or chain & _FIGURE:
         return "caption"
     if node.tag in _HEADINGS:
         return "heading"
     if node.tag in ("li", "dt", "dd"):
         return "list"
-    if node.tag in ("td", "th", "caption") or "table" in chain:
+    if node.tag in ("td", "th", "caption") or chain & _TABLE:
         return "table"
     if node.tag == "pre":
         return "pre"
@@ -398,10 +421,11 @@ def extract_document(
 
     # stage 5: classify + filter survivors
     kept: list[int] = []
+    chain_memo: dict = {}
     for i in range(n):
         if actions[i] != intervals.KEEP:
             continue
-        rtype = _classify(candidates[i]["node"])
+        rtype = _classify(candidates[i]["node"], chain_memo)
         candidates[i]["rtype"] = rtype
         if rtype in params.drop_types:
             continue
@@ -464,15 +488,13 @@ def extract_document(
     # by plausibilize / dropped by classify/filter are not emitted, so
     # resolving against them would leave dangling region_id references
     # for consumers joining child→parent.
-    # NOTE: at REGION level this is "" by construction — kept regions
-    # are span-disjoint and an ancestor's token hull contains its
-    # descendants', so no kept region can be another's DOM ancestor
-    # (pinned by test_kernel). The field carries real links at the
-    # line/word levels (kernel/sublevels.py), where children are
+    # At REGION level this is "" by construction, so it is not walked:
+    # kept regions are span-disjoint and an ancestor's token hull
+    # contains its descendants', so no kept region can be another's
+    # DOM ancestor (pinned by test_kernel). Media spans (below) do
+    # resolve against the kept regions. The field carries real links at
+    # the line/word levels (kernel/sublevels.py), where children are
     # extracted WITHIN a kept region instead of competing with it.
-    cand_by_node = {
-        id(candidates[i]["node"]): f"r{candidates[i]['pre_index']:04d}" for i in kept
-    }
     for out_order, i in enumerate(kept):
         c = candidates[i]
         s, e = int(k_starts[out_order]), int(k_ends[out_order])
@@ -480,21 +502,13 @@ def extract_document(
         if out_order:
             cursor += len(sep)
         pieces.append(piece)
-        parent_id = ""
-        anc = c["node"].parent
-        while anc is not None:
-            pid = cand_by_node.get(id(anc))
-            if pid is not None:
-                parent_id = pid
-                break
-            anc = anc.parent
         region = {
             "region_id": f"r{c['pre_index']:04d}",
             "rtype": c["rtype"],
             "subtype": c["node"].tag,
             "start": cursor,
             "end": cursor + len(piece),
-            "parent_id": parent_id,
+            "parent_id": "",
             "order": out_order,
             "score": c.get("score", 1.0),
         }
@@ -545,6 +559,10 @@ def extract_document(
         # at/after it hosts the zero-length span; trailing media lands
         # at the end of the output.
         n_kept_final = len(kept)
+        cand_by_node = {
+            id(candidates[i]["node"]): f"r{candidates[i]['pre_index']:04d}"
+            for i in kept
+        }
 
         def out_pos(m):
             pos = int(tok_start[m["tok_at"]]) if m["tok_at"] < len(tokens) else doc_len

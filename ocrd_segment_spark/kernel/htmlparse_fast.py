@@ -32,6 +32,7 @@ full fixture corpus (tests/test_fastparse.py) — same recovery rules:
 from __future__ import annotations
 
 import re
+from collections import defaultdict
 from html import unescape
 
 from .htmlparse import BLOCK_TAGS, VOID_TAGS, Node
@@ -99,6 +100,10 @@ def parse_html_fast(html: bytes | str) -> Node | None:
 def _parse(html: str) -> Node:
     root = Node("#document")
     stack = [root]
+    # open elements per tag (root excluded): an end tag whose tag is
+    # not open is ignored without scanning the stack, so stray end
+    # tags cost O(1) instead of O(depth)
+    n_open: defaultdict[str, int] = defaultdict(int)
     pos = 0
     n = len(html)
     while pos < n:
@@ -119,8 +124,10 @@ def _parse(html: str) -> Node:
                 top = stack[-1].tag
                 if top == "p" and tag in BLOCK_TAGS:
                     stack.pop()
+                    n_open["p"] -= 1
                 elif top == "li" and tag == "li":
                     stack.pop()
+                    n_open["li"] -= 1
             node = Node(tag, None, stack[-1])
             attrs_txt = attrs_g or ""
             node.attrs_raw = attrs_txt
@@ -149,11 +156,18 @@ def _parse(html: str) -> Node:
                     pos = close.end()
             elif tag not in VOID_TAGS and not self_closing:
                 stack.append(node)
+                n_open[tag] += 1
         elif end_tag is not None:
             tag = end_tag.lower()
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == tag:
-                    del stack[i:]
-                    break
+            if stack[-1].tag == tag:
+                stack.pop()
+                n_open[tag] -= 1
+            elif n_open[tag]:
+                i = len(stack) - 1
+                while stack[i].tag != tag:
+                    i -= 1
+                for closed in stack[i:]:
+                    n_open[closed.tag] -= 1
+                del stack[i:]
         # comments / declarations / PIs: skipped
     return root

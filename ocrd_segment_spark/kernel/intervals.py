@@ -5,9 +5,10 @@ reference repair.py:310-365, 592-664, 736-757) become interval
 arithmetic over ``[start, end)`` character spans. Intervals are exact
 where polygons needed buffering/validity repair, so several reference
 ops degenerate (documented per function). All functions are pure and
-deterministic; vectorized numpy where pairwise (the per-page n is small
-— hundreds at most — so O(n²) matrices per page are fine, exactly like
-the reference's per-page O(n²) loops repair.py:219-237).
+deterministic. Pairwise helpers broadcast over one page's spans;
+``plausibilize`` resolves the laminar spans a DOM produces with one
+O(n log n) sort-and-sweep and keeps the reference's per-page O(n²) pair
+loop (repair.py:219-237) only for sets with a partial overlap.
 """
 
 from __future__ import annotations
@@ -97,14 +98,20 @@ def plausibilize(
       repair.py:251-266); otherwise SPLIT: subtract the overlap from
       the smaller span (G15, repair.py:505-513).
 
-    Spans from a real DOM are laminar (equality/containment only); the
-    overlap branches exist for perturbed/synthetic inputs and the
-    evaluate analog, and are unit-tested directly.
-
     Processing follows the reference's ascending-area total order
     (W3, repair.py:221-227): sort by length ascending, document order as
     tiebreak, and resolve each pair once with the earlier-sorted span as
-    the "smaller" side.
+    the "smaller" side (``_pair_loop``).
+
+    Spans from a real DOM are laminar: any two are disjoint, equal or
+    nested. There the pair loop only ever deletes, and its result is
+    one survivor per outermost class of equal spans — the first in
+    document order among those of maximal depth. ``_laminar_deletes``
+    finds that result with one sort-and-sweep in O(n log n); the pair
+    loop runs only when some two spans partially overlap (perturbed or
+    synthetic input, the repair operator, the evaluate analog).
+    Equality with the pair loop is fuzz-pinned by
+    tests/test_plausibilize_sweep.py.
 
     Returns (actions, out_starts, out_ends) aligned with the input;
     actions[i] ∈ {KEEP, DELETE, MERGE_INTO}; out spans reflect merges
@@ -117,7 +124,47 @@ def plausibilize(
     actions = np.zeros(n, dtype=np.int64)
     if n <= 1:
         return actions, s, e
+    doomed = _laminar_deletes(s, e, depths)
+    if doomed is not None:
+        actions[doomed] = DELETE
+    else:
+        _pair_loop(s, e, depths, actions, merge_min_overlap)
+    return actions, s, e
 
+
+def _laminar_deletes(s: np.ndarray, e: np.ndarray, depths: np.ndarray):
+    """Indices the pair loop deletes when the spans are laminar, or
+    None when two of them partially overlap.
+
+    Spans with ``end <= start`` intersect nothing in the pair loop, so
+    they stay KEEP and take no part in the sweep. The rest are sorted
+    by (start asc, end desc, depth desc, index asc): a container comes
+    before its contents and each class of equal spans is contiguous,
+    its first member being the pair loop's winner. One stack sweep
+    checks laminarity; then a span survives iff its end exceeds the
+    running maximum end of every span sorted before it — that rules out
+    both a strict container and an equal span ahead of it."""
+    idx = np.nonzero(e > s)[0]
+    ps, pe = s[idx], e[idx]
+    order = np.lexsort((idx, -depths[idx], -pe, ps))
+    ss, se = ps[order], pe[order]
+    open_ends: list[int] = []
+    for a, b in zip(ss.tolist(), se.tolist()):
+        while open_ends and open_ends[-1] <= a:
+            open_ends.pop()
+        if open_ends and open_ends[-1] < b:
+            return None  # partial overlap
+        open_ends.append(b)
+    survives = np.ones(len(se), dtype=bool)
+    survives[1:] = se[1:] > np.maximum.accumulate(se)[:-1]
+    return idx[order[~survives]]
+
+
+def _pair_loop(s, e, depths, actions, merge_min_overlap):
+    """The reference's O(n²) pair loop over the W3 order; resolves
+    partial overlaps by merge or split. Updates ``s``, ``e`` and
+    ``actions`` in place."""
+    n = len(s)
     length = e - s
     # ascending area (length), document order tiebreak — W3 total order
     order = np.lexsort((np.arange(n), length))
@@ -166,7 +213,6 @@ def plausibilize(
                     s[i] = e[j]
                 if e[i] <= s[i]:
                     actions[i] = DELETE
-    return actions, s, e
 
 
 def simplify_gap_merge(starts: np.ndarray, ends: np.ndarray, tolerance: int):

@@ -551,8 +551,9 @@ def with_lm_bits(
     from .langid import _round6
 
     table, oov = lm_table
-    # filled lazily inside the UDF (once per deserialized task closure)
-    _bits_arrays_memo: dict = {}
+    # filled lazily inside the UDF (once per deserialized task closure);
+    # the "arrays" key marks it built, so an empty table builds once too
+    _bits_memo: dict = {}
 
     @pandas_udf("double")
     def _bits(texts: pd.Series, langs: pd.Series) -> pd.Series:
@@ -560,8 +561,9 @@ def with_lm_bits(
 
         # per-lang sorted key/value arrays, built once per worker from
         # the pickled model dict (model-sized, langs × charset²)
-        arrays: dict = _bits_arrays_memo
-        if not arrays:
+        arrays = _bits_memo.get("arrays")
+        if arrays is None:
+            arrays = {}
             per: dict = {}
             for (l, bg), v in table.items():
                 per.setdefault(l, []).append(
@@ -573,6 +575,7 @@ def with_lm_bits(
                     np.array([k for k, _ in items], dtype=np.int64),
                     np.array([v for _, v in items], dtype=np.float64),
                 )
+            _bits_memo["arrays"] = arrays
         out = []
         for t, lang in zip(texts, langs):
             t = t if isinstance(t, str) else ""

@@ -209,6 +209,40 @@ def test_self_close_slash_binding_matches_stdlib():
         assert a == b, (case, a, b)
 
 
+def test_deep_stray_end_tags_match_stdlib():
+    """End tags whose tag is not open are skipped without a stack scan
+    (htmlparse_fast keeps a per-tag count of open elements). Deep stacks
+    full of stray end tags, end tags that close through many levels,
+    and auto-closed <p>/<li> must still build the stdlib's tree."""
+    import random
+
+    from perfbench.inputs import _heavy_page
+
+    def shape(node):
+        return [
+            c if isinstance(c, str) else (c.tag, shape(c))
+            for c in node.children
+        ]
+
+    cases = [
+        _heavy_page(random.Random(2), 300, 2),  # <div>words</font> per level
+        "<div>" * 200 + "<span>x" + "</b><div>y</i>" * 200 + "</span>z</div>tail",
+        "<section>" + "<div><b>x" * 100 + "</div>y" * 100 + "</section>after",
+        "<ul>" + "<li><div>a</p>b</li><li>c" * 100 + "</ul></li>after",
+        "<p>a<div>b</p>c</div></div>" * 50 + "<section><p>d</section></p>e",
+    ]
+    orig = X.parse_html
+    try:
+        for html in cases:
+            assert shape(parse_stdlib(html)) == shape(parse_html_fast(html))
+            X.parse_html = parse_stdlib
+            a = extract_document(html)
+            X.parse_html = parse_html_fast
+            assert extract_document(html) == a
+    finally:
+        X.parse_html = orig
+
+
 def test_attr_parity_between_parsers():
     """node_attrs() must agree between the stdlib builder (eager dict)
     and the fast parser (lazy raw-text tokenization) on every
